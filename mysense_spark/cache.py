@@ -10,11 +10,12 @@ cannot unpersist before returning without forfeiting the reuse.
 
 The resolution: builders register every persist here via
 `tracked_persist`, and the query registry releases ALL tracked caches at
-the entry of the NEXT query. Live cached storage is therefore bounded by
-one query's working set in any sweep — the driver's 50-query gate, the
-full bench, a 200-test pytest session — instead of accumulating until
-the JVM dies (the round-4 full-suite failure mode that previously
-required one-process-per-leg session hygiene).
+the entry of the NEXT query invocation, the same query again included.
+Live cached storage is therefore bounded by one query's working set in
+any sweep — a 50-query oracle gate, the full bench, a 200-test pytest
+session — instead of accumulating until the JVM dies (the round-4
+full-suite failure mode that previously required one-process-per-leg
+session hygiene).
 
 localCheckpoint() blocks are deliberately NOT tracked: their RDDs are
 freed by the ContextCleaner once the DataFrame is garbage-collected, and
@@ -26,10 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
-_OWNER: str | None = None
 
 
-def begin_query(name: str) -> None:
+def begin_query() -> None:
     """Called by the registry wrapper at query entry. Releases ALL
     tracked caches — including when the SAME query re-enters. The
     previous same-owner exemption let the bench's best-of-2 second
@@ -41,14 +41,12 @@ def begin_query(name: str) -> None:
     invocation now starts cache-cold; persists still live through the
     invocation's own collect (released at the NEXT entry), which is all
     the within-query reuse they exist for."""
-    global _OWNER
     release_tracked()
-    _OWNER = name
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
-    """persist() that the query registry will release when a different
-    query next enters."""
+    """persist() that the query registry will release when the next
+    query invocation enters."""
     df = df.persist()
     _TRACKED.append(df)
     return df

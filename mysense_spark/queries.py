@@ -147,18 +147,18 @@ _PRIORITY = (
 
 
 def _hygienic(fn: Callable[[SparkSession, str], DataFrame]):
-    """Release the PREVIOUS query's tracked caches when a DIFFERENT
-    query enters (see cache.py): live cached storage stays bounded by
-    one query's working set across any sweep, each query's own persists
-    survive through its collect, and re-running the same query stays
-    cache-warm."""
+    """Release the PREVIOUS invocation's tracked caches at every query
+    entry (see cache.py), the same query again included: live cached
+    storage stays bounded by one query's working set across any sweep,
+    each query's own persists survive through its collect, and every
+    invocation starts cache-cold."""
     import functools
 
     from .cache import begin_query
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        begin_query(fn.__qualname__)
+        begin_query()
         return fn(spark, sf_dir)
 
     return run

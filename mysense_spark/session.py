@@ -24,6 +24,9 @@ _STATE_STORE_PROVIDERS = {
 }
 
 
+_CHANGELOG_CHECKPOINTING = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+
 def _state_store_provider() -> str:
     """Resolve $SPARK_GRAFT_STATE_STORE (case-insensitive) to a provider
     class, with a usable error instead of a bare KeyError deep inside
@@ -69,6 +72,11 @@ def get_spark(app_name: str = "mysense_spark", shuffle_partitions: int | None = 
             "spark.sql.streaming.stateStore.providerClass",
             _state_store_provider(),
         )
+        # RocksDB commits write a changelog of the batch's key updates
+        # instead of uploading a full snapshot per micro-batch; snapshots
+        # move to the background maintenance task. Existing checkpoints
+        # switch mode in either direction.
+        .config(_CHANGELOG_CHECKPOINTING, "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -34,6 +34,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DAY_COL = "day"
 # null timestamps get a fixed sentinel day so the touched-day filter and
@@ -272,6 +273,8 @@ def _file_key_ranges(files: list[str], col: str) -> dict[str, tuple]:
 
 
 _RANGES = "_key_ranges.json"
+# the footer key under which Spark's parquet writer records the schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _prune_col(keys: list[str], ts_col: str) -> str | None:
@@ -563,20 +566,29 @@ def upsert_parquet_partitioned(
     (lib/MyARCHIVE.py:360-456 REPLACE INTO against the per-day-indexed
     table — same cost model, extended to the file level).
 
-    Plan shape per micro-batch: one tiny distinct-day list (control
-    plane — O(days in batch) rows, never data; a dynamic-partition-
-    pruning semi-join was tried instead but DPP's benefit heuristic
-    makes the pruning non-deterministic, while a literal isin() is a
-    STATIC PartitionFilter the plan-contract test can pin), then per
-    chunk of ≤30 touched days: footer-statistics file pruning (only
-    files whose first-key [min,max] range intersects the batch's keys
-    are read and rewritten — merged output is range-partitioned on the
-    key so files keep narrow ranges and future merges stay selective),
-    one key-window dedup, one partitioned stage write, one idempotent
-    file-level promote. A year-deep archive with a 2-day late-data
-    watermark reads 2 partitions — and of those, only the files the
-    late kits actually live in; a 365-day backfill stages at most 30
-    days at a time instead of the whole year.
+    Plan shape per micro-batch: one control-plane collect of the
+    batch's distinct (day, first-key) pairs, capped at _MAX_PRUNE_KEYS
+    — it yields both the touched days and each day's keys (O(pairs in
+    batch) rows, never data; a dynamic-partition-pruning semi-join was
+    tried instead but DPP's benefit heuristic makes the pruning
+    non-deterministic, while a literal isin() is a STATIC
+    PartitionFilter the plan-contract test can pin). Only a batch over
+    the cap (or a key-less archive) collects the distinct days alone,
+    and a deep over-cap backfill re-tries the capped collect per chunk.
+    Then per chunk of ≤30 touched days: footer-statistics file pruning
+    (only files whose first-key [min,max] range intersects the batch's
+    keys are read and rewritten — merged output is range-partitioned on
+    the key so files keep narrow ranges and future merges stay
+    selective), a replace-file read whose schema comes from a footer
+    on the driver (no schema-inference job), one range exchange that
+    serves both the key-window dedup and the partitioned stage write,
+    one idempotent file-level promote. A second merge into an existing
+    day runs 6 Spark jobs on the fixture batches
+    (test_merge_job_count_ratchet pins the ceiling). A
+    year-deep archive with a 2-day late-data watermark reads 2
+    partitions — and of those, only the files the late kits actually
+    live in; a 365-day backfill stages at most 30 days at a time instead
+    of the whole year.
 
     Write amplification: a batch rewrites Σ(selected file sizes) +
     O(batch), NOT Σ(touched day sizes) — measured per-batch in
@@ -616,15 +628,26 @@ def upsert_parquet_partitioned(
         DAY_COL,
         F.coalesce(F.date_format(F.col(ts_col), "yyyy-MM-dd"), F.lit(NULL_DAY)),
     )
-    # persist unconditionally: even a single-chunk merge drives THREE
-    # actions over the batch lineage (the days collect below, the
-    # (day, key) prune collect, the stage write) — unpersisted, each one
-    # re-evaluates the micro-batch source on the hot ingest path
+    # persist unconditionally: even a single-chunk merge drives TWO
+    # actions over the batch lineage (the control-plane collect below,
+    # the stage write) — unpersisted, each one re-evaluates the
+    # micro-batch source on the hot ingest path
     batch.persist()
-    # control-plane collect: bounded by distinct days per micro-batch
-    # (exempted in test_sinks_never_materialize_on_driver, like the
-    # similarity rerank fence) — this list IS the partition-pruning key
-    days = sorted(r[0] for r in batch.select(DAY_COL).distinct().collect())
+    # prune_col: the axis batches are sparse on (a late-data batch
+    # touches few kits; stats on a key the merged files are
+    # range-partitioned by make the file selection sharp). With a
+    # single-key archive there is nothing to prune on.
+    prune_col = _prune_col(keys, ts_col)
+    # one control-plane collect gives both the touched days (the static
+    # partition-pruning list) and each day's keys for file pruning; only
+    # a key-less archive or a fleet-wide batch over the cap needs the
+    # separate days collect (exempted in
+    # test_sinks_never_materialize_on_driver — O(days), never data)
+    keys_by_day = _prune_keys(batch, prune_col) if prune_col is not None else None
+    if keys_by_day is not None:
+        days = sorted(keys_by_day)
+    else:
+        days = sorted(r[0] for r in batch.select(DAY_COL).distinct().collect())
     if not days:
         batch.unpersist()
         return
@@ -637,12 +660,6 @@ def upsert_parquet_partitioned(
             f"rewrite the archive with write_date_partitioned first)"
         )
 
-    # prune_col: the axis batches are sparse on (a late-data batch
-    # touches few kits; stats on a key the merged files are
-    # range-partitioned by make the file selection sharp). With a
-    # single-key archive there is nothing to prune on.
-    prune_col = _prune_col(keys, ts_col)
-
     # chunk deep backfills: a 365-day replay stages ≤30 days at a time,
     # bounding peak stage size; a crash between chunks is covered by the
     # committed chunks being idempotent re-merges under checkpoint replay
@@ -650,39 +667,28 @@ def upsert_parquet_partitioned(
     try:
         for chunk in chunks:
             cbatch = batch.where(F.col(DAY_COL).isin(chunk))
-            w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
             if layout != "partitioned":
-                deduped = (
-                    cbatch.withColumn("__rn", F.row_number().over(w))
-                    .where(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
                 # manifest BEFORE the stage write — the ordering that
                 # keeps recovery sound (_recover_file_merge docstring)
                 _write_manifest(path, [])
-                _stage_write(deduped, stage, prune_col)
+                _stage_write(cbatch, stage, keys, order_col, prune_col)
                 _promote_file_merge(stage, path, prune_col)
                 layout = "partitioned"  # subsequent chunks merge
                 continue
 
             # file pruning: per touched day, select only the files whose
             # prune_col footer range intersects the batch's keys
-            if prune_col is not None:
-                kd = cbatch.select(DAY_COL, prune_col).distinct().limit(_MAX_PRUNE_KEYS + 1).collect()
-                keys_by_day: dict | None = {}
-                if len(kd) > _MAX_PRUNE_KEYS:
-                    keys_by_day = None  # fleet-wide batch: prune by day only
-                else:
-                    for r in kd:
-                        keys_by_day.setdefault(r[0], []).append(r[1])
-            else:
-                keys_by_day = None
+            chunk_keys = keys_by_day
+            if chunk_keys is None and prune_col is not None and len(chunks) > 1:
+                # over the cap batch-wide; one chunk of a deep backfill
+                # may still be under it
+                chunk_keys = _prune_keys(cbatch, prune_col)
             replace_files: list[str] = []
             for day in chunk:
                 day_dir = os.path.join(path, f"{DAY_COL}={day}")
                 if not os.path.isdir(day_dir):
                     continue
-                bkeys = None if keys_by_day is None else keys_by_day.get(day, [])
+                bkeys = None if chunk_keys is None else chunk_keys.get(day, [])
                 rep, _keep = _select_files(day_dir, bkeys, prune_col)
                 replace_files.extend(rep)
 
@@ -691,15 +697,14 @@ def upsert_parquet_partitioned(
                 **{"spark.sql.sources.partitionColumnTypeInference.enabled": "false"},
             ):
                 if replace_files:
-                    existing = spark.read.option("basePath", path).parquet(*replace_files)
+                    reader = spark.read.option("basePath", path)
+                    schema = _footer_schema(replace_files)
+                    if schema is not None:
+                        reader = reader.schema(schema)
+                    existing = reader.parquet(*replace_files)
                     merged = existing.unionByName(cbatch, allowMissingColumns=True)
                 else:
                     merged = cbatch
-                deduped = (
-                    merged.withColumn("__rn", F.row_number().over(w))
-                    .where(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
                 # manifest BEFORE the stage write: a stage that reaches
                 # _SUCCESS without its manifest would otherwise be
                 # promoted by the LEGACY recovery as full-day truth,
@@ -711,21 +716,61 @@ def upsert_parquet_partitioned(
                 # the stage write is an ACTION over a plan that reads
                 # `path`; it must fully materialize before the promote
                 # mutates `path`
-                _stage_write(deduped, stage, prune_col)
+                _stage_write(merged, stage, keys, order_col, prune_col)
             _promote_file_merge(stage, path, prune_col)
     finally:
         batch.unpersist()
 
 
-def _stage_write(deduped: DataFrame, stage: str, prune_col: str | None) -> None:
-    """Stage the merged chunk day-partitioned and RANGE-partitioned on
-    (day, prune_col): each output file then covers a narrow key range,
-    which is exactly what keeps the NEXT merge's footer-stats file
-    selection sharp. Without the range partitioning, every file spans
-    the whole key space and file-level pruning degenerates to whole-day
-    rewrites."""
+def _footer_schema(files: list[str]) -> StructType | None:
+    """The Spark schema recorded in the footer of the first file (by
+    path) — the file `spark.read.parquet` infers the schema from when
+    schemas are not merged. Read on the driver, so the replace-file read
+    skips Spark's schema-inference job. None when there is no usable
+    recorded schema (a file from another writer, an unreadable footer):
+    Spark then infers, and reports a broken file, itself."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    try:
+        meta = pq.read_metadata(min(files)).metadata or {}
+        return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    except (OSError, ValueError, KeyError):
+        return None
+
+
+def _prune_keys(batch: DataFrame, prune_col: str) -> dict[str, list] | None:
+    """The batch's distinct (day, prune_col) pairs as {day: [keys]}, or
+    None above _MAX_PRUNE_KEYS pairs (fleet-wide: prune by day only).
+    Capped by a limit() BEFORE the collect, so the driver never holds
+    more than the cap."""
+    kd = batch.select(DAY_COL, prune_col).distinct().limit(_MAX_PRUNE_KEYS + 1).collect()
+    if len(kd) > _MAX_PRUNE_KEYS:
+        return None
+    out: dict[str, list] = {}
+    for day, key in kd:
+        out.setdefault(day, []).append(key)
+    return out
+
+
+def _stage_write(
+    rows: DataFrame, stage: str, keys: list[str], order_col: str, prune_col: str | None
+) -> None:
+    """Dedup the merged chunk to the latest row per key and stage it
+    day-partitioned and RANGE-partitioned on (day, prune_col): each
+    output file then covers a narrow key range, which is exactly what
+    keeps the NEXT merge's footer-stats file selection sharp. Without the
+    range partitioning, every file spans the whole key space and
+    file-level pruning degenerates to whole-day rewrites.
+
+    The dedup window needs no exchange of its own: the rows of one key
+    share its day (`ts` is a key) and its prune_col, so they land in one
+    range partition, and a window over keys + day is already clustered
+    by the range exchange."""
     if prune_col is not None:
-        deduped = deduped.repartitionByRange(F.col(DAY_COL), F.col(prune_col))
+        rows = rows.repartitionByRange(F.col(DAY_COL), F.col(prune_col))
+    deduped = latest_view(rows, [*keys, DAY_COL], order_col)
     deduped.write.mode("overwrite").partitionBy(DAY_COL).parquet(stage)
 
 
@@ -843,13 +888,9 @@ def compact_days(
             spark,
             **{"spark.sql.sources.partitionColumnTypeInference.enabled": "false"},
         ):
-            deduped = latest_view(
-                spark.read.option("basePath", path).parquet(*replace_files),
-                keys,
-                order_col,
-            )
+            existing = spark.read.option("basePath", path).parquet(*replace_files)
             _write_manifest(path, replace_files)
-            _stage_write(deduped, stage, prune_col)
+            _stage_write(existing, stage, keys, order_col, prune_col)
         _promote_file_merge(stage, path, prune_col)
     return targets
 

@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import values_df
 from ..registry import FIELD_REGISTRY, FIELD_TRANSLATE, PASSTHROUGH_FIELDS, VALID_BOUNDS
 from ..sources.lora import make_decode_udf
 from ..sources.ttn import parse_envelopes
@@ -77,7 +76,12 @@ def decode_stream(normalized: DataFrame) -> DataFrame:
             F.col("serial"),
             F.col("event_ts").alias("ts"),
             F.col("ingest_ts"),
-            F.explode("decoded").alias("sensor_type", "fields"),
+            # explode_outer, not explode: Catalyst infers
+            # `isnotnull(decoded) AND size(decoded) > 0` below a plain
+            # explode, and pushing that filter down evaluates the decode
+            # UDF in a second Python node. The outer variant's null row
+            # (undecodable payload) is dropped by the meta filter below.
+            F.explode_outer("decoded").alias("sensor_type", "fields"),
         )
         # the meta block (port-10 frame header: serial/wasp_id/seq) is not
         # a measurement; drop it before the numeric cast
@@ -94,11 +98,14 @@ def decode_stream(normalized: DataFrame) -> DataFrame:
         .withColumn("field", _translate_expr(F.col("raw_field")))
         .drop("raw_field")
     )
-    # registry join: unit + category (broadcast dimension, J1 pattern)
-    units = [(f, u, c) for f, (u, _p, c) in FIELD_REGISTRY.items()]
-    spark = normalized.sparkSession
-    unit_dim = values_df(spark, units, "field string, unit string, category string")
-    enriched = long_rows.join(F.broadcast(unit_dim), "field", "left")
+    # registry lookup: unit + category per field (NULL when the field is
+    # not registered), as literal map expressions — a broadcast join of
+    # the same dimension costs every micro-batch a broadcast job
+    unit = F.create_map(*(F.lit(x) for f, (u, _p, _c) in FIELD_REGISTRY.items() for x in (f, u)))
+    category = F.create_map(*(F.lit(x) for f, (_u, _p, c) in FIELD_REGISTRY.items() for x in (f, c)))
+    enriched = long_rows.withColumn("unit", unit[F.col("field")]).withColumn(
+        "category", category[F.col("field")]
+    )
     # P2 range validation from the bounds registry
     valid = F.lit(True)
     for fname, (lo, hi) in VALID_BOUNDS.items():
@@ -320,15 +327,21 @@ def run_lines_stream(
     (kit_id, ts, field) within the watermark horizon — at fleet scale
     that is millions of live keys, so the query starts under the
     RocksDB provider (state spills to local disk; heap is bounded by
-    the block cache) unless the session already pins a provider. The
-    conf is snapshot per query at start() and recorded in the
-    checkpoint, so scoping it here neither leaks into the session nor
-    flips an existing checkpoint's provider. Per-key state is ~100 B
-    (key + watermark timestamp); sizing is keys-within-horizon x that,
-    per state partition.
+    the block cache) with changelog checkpointing, unless the session
+    already pins either conf. A commit then writes only the batch's
+    key updates as `N.changelog`; full `.zip` snapshots are uploaded by
+    Spark's background maintenance once enough changelogs accumulate
+    (`stateStore.minDeltasForSnapshot`), so the per-batch commit cost
+    follows the batch, not the state size. Confs are snapshot per query
+    at start(), so scoping them here does not leak into the session; the
+    provider is recorded in the checkpoint and never flipped, while the
+    checkpoint format may switch between snapshot and changelog mode in
+    either direction. Per-key state is ~100 B (key + watermark
+    timestamp); sizing is keys-within-horizon x that, per state
+    partition.
 
     Returns the StreamingQuery (caller awaits/stops)."""
-    from ..session import _STATE_STORE_PROVIDERS
+    from ..session import _CHANGELOG_CHECKPOINTING, _STATE_STORE_PROVIDERS
     from ..sinks.upsert import (
         _layout,
         _scoped_conf,
@@ -405,17 +418,16 @@ def run_lines_stream(
     elif trigger is not None:
         writer = writer.trigger(processingTime=trigger)
     spark = lines.sparkSession
-    if spark.conf.get("spark.sql.streaming.stateStore.providerClass", None) is None:
-        with _scoped_conf(
-            spark,
-            **{
-                "spark.sql.streaming.stateStore.providerClass": _STATE_STORE_PROVIDERS[
-                    "rocksdb"
-                ]
-            },
-        ):
-            return writer.start()
-    return writer.start()
+    state_confs = {
+        k: v
+        for k, v in (
+            ("spark.sql.streaming.stateStore.providerClass", _STATE_STORE_PROVIDERS["rocksdb"]),
+            (_CHANGELOG_CHECKPOINTING, "true"),
+        )
+        if spark.conf.get(k, None) is None
+    }
+    with _scoped_conf(spark, **state_confs):
+        return writer.start()
 
 
 def run_file_stream(

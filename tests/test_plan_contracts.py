@@ -246,6 +246,61 @@ def test_no_python_row_udfs_in_registry(spark, sf_dir):
     assert not offenders, f"row-at-a-time Python UDFs in: {offenders}"
 
 
+def test_lora_decode_runs_once_per_row(spark, sf_dir, tmp_path):
+    """The ingest chain evaluates the LoRa decode UDF in exactly ONE
+    Python node. A plain explode of the decoded map lets Catalyst infer
+    `isnotnull(decoded) AND size(decoded) > 0` below the generator, and
+    pushing that filter down evaluates the UDF a second time per row."""
+    from mysense_spark.streaming.pipeline import run_file_batch
+    from tests.fixtures_mqtt import ALL_LINES
+
+    dump = tmp_path / "a.mqtt"
+    dump.write_text("\n".join(ALL_LINES) + "\n")
+    plans = {
+        "run_file_batch": run_file_batch(spark, str(dump))._jdf.queryExecution().executedPlan().toString(),
+        "ttn_decode": _plan(spark, "ttn_decode", sf_dir),
+    }
+    counts = {name: plan.count("ArrowEvalPython") for name, plan in plans.items()}
+    assert counts == {"run_file_batch": 1, "ttn_decode": 1}, counts
+
+
+# Spark jobs of one merge into an existing day (fixture batches, 4
+# cores). It was 11 when the days and the prune keys came from two
+# collects, the replace-file read inferred its schema in a job of its
+# own, the dedup window had an exchange of its own and the unit lookup
+# was a broadcast join.
+_MERGE_JOB_CEILING = 6
+
+
+def test_merge_job_count_ratchet(spark, tmp_path):
+    """Job-count ratchet for the partitioned merge sink: the second of
+    two merges into one archive (existing day, replace files selected)
+    may run at most _MERGE_JOB_CEILING Spark jobs. Fewer pass; more
+    fail. Jobs, not tasks — task counts follow the core count."""
+    from mysense_spark.sinks.upsert import upsert_parquet_partitioned
+    from mysense_spark.streaming.pipeline import run_file_batch
+    from tests.fixtures_mqtt import ALL_LINES, V2_PORT2, V2_PORT4
+
+    archive = str(tmp_path / "arch")
+    sc = spark.sparkContext
+    jobs = []
+    for i, lines in enumerate([ALL_LINES, [V2_PORT2, V2_PORT4]]):
+        dump = tmp_path / f"b{i}.mqtt"
+        dump.write_text("\n".join(lines) + "\n")
+        group = f"merge-ratchet-{i}-{tmp_path.name}"
+        sc.setJobGroup(group, "merge job-count ratchet")
+        try:
+            upsert_parquet_partitioned(
+                run_file_batch(spark, str(dump)), archive,
+                keys=["kit_id", "ts", "field"], order_col="ingest_ts", ts_col="ts",
+            )
+        finally:
+            for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(k, None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert 0 < jobs[1] <= _MERGE_JOB_CEILING, f"second merge ran {jobs[1]} jobs"
+
+
 def test_ngram_jaccard_self_join_is_df_capped(spark, sf_dir):
     """The Jaccard verify tier's one scale hazard is a hot-shingle bucket
     (quadratic OUTPUT — AQE skew-split can't fix an output explosion).

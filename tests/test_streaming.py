@@ -9,6 +9,11 @@ from pyspark.sql import functions as F
 from tests.fixtures_mqtt import ALL_LINES, V2_PORT2, V2_PORT4
 
 
+_CHANGELOG = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+# RocksDB state on disk: per-commit changelogs, or snapshot zips
+_ROCKSDB_FILES = (".changelog", ".zip")
+
+
 def _write_dump(tmp_path, name, lines):
     p = tmp_path / name
     p.write_text("\n".join(lines) + "\n")
@@ -804,8 +809,10 @@ def test_crawl_rate_monitor_flags_spike(spark, tmp_path):
 def test_streaming_state_runs_under_rocksdb(spark, tmp_path):
     """The session factory pins the RocksDB state store provider (fleet
     scale: millions of per-device keys must spill to disk, not live in
-    executor heap). Drive a stateful query and assert the checkpoint
-    holds RocksDB zip snapshots — not the HDFS provider's .delta files —
+    executor heap) with changelog checkpointing. Drive a stateful query
+    and assert the checkpoint holds RocksDB artifacts — `N.changelog`
+    commits (changelog mode: a one-batch checkpoint has no snapshot
+    yet) or `.zip` snapshots — and not the HDFS provider's .delta files,
     so the whole streaming matrix in this file demonstrably runs under
     RocksDB, not just a conf string."""
     import datetime as dt
@@ -814,6 +821,7 @@ def test_streaming_state_runs_under_rocksdb(spark, tmp_path):
     from mysense_spark.streaming.state import kit_throttle
 
     assert "RocksDB" in spark.conf.get("spark.sql.streaming.stateStore.providerClass")
+    assert spark.conf.get(_CHANGELOG) == "true"
 
     base = dt.datetime(2024, 1, 1)
     rows = [("k1", base + dt.timedelta(seconds=60 * i)) for i in range(6)]
@@ -835,14 +843,15 @@ def test_streaming_state_runs_under_rocksdb(spark, tmp_path):
     assert len(out) == 6
 
     state_files = glob.glob(str(tmp_path / "rdb_ckpt" / "state" / "**" / "*"), recursive=True)
-    assert any(f.endswith(".zip") for f in state_files), "no RocksDB snapshot zips"
+    assert any(f.endswith(_ROCKSDB_FILES) for f in state_files), "no RocksDB changelogs or snapshots"
     assert not any(f.endswith(".delta") for f in state_files), "HDFS provider artifacts present"
 
 
 def test_pipeline_scopes_rocksdb_for_vanilla_sessions(spark, tmp_path):
-    """run_lines_stream must start its query under RocksDB even when the
-    caller's session never set a provider (the driver uses a vanilla
-    SparkSession) — and must NOT leak the conf into the session."""
+    """run_lines_stream must start its query under RocksDB with
+    changelog checkpointing even when the caller's session set neither
+    conf (`__spark_entry__` callers pass a vanilla SparkSession) — and
+    must NOT leak either conf into the session."""
     import glob
     import sys
 
@@ -851,10 +860,11 @@ def test_pipeline_scopes_rocksdb_for_vanilla_sessions(spark, tmp_path):
 
     from mysense_spark.streaming.pipeline import run_file_stream
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(key, None)
+    keys = ("spark.sql.streaming.stateStore.providerClass", _CHANGELOG)
+    prior = {k: spark.conf.get(k, None) for k in keys}
     try:
-        spark.conf.unset(key)  # simulate the vanilla driver session
+        for k in keys:
+            spark.conf.unset(k)  # simulate a vanilla session
         src = tmp_path / "in"
         src.mkdir()
         (src / "a.mqtt").write_text("\n".join(ALL_LINES))
@@ -862,12 +872,68 @@ def test_pipeline_scopes_rocksdb_for_vanilla_sessions(spark, tmp_path):
             spark, str(src), str(tmp_path / "ckpt"), str(tmp_path / "out"), partitioned=False
         )
         q.awaitTermination(120)
-        assert spark.conf.get(key, None) is None, "provider conf leaked into session"
+        for k in keys:
+            assert spark.conf.get(k, None) is None, f"{k} leaked into session"
         state_files = glob.glob(str(tmp_path / "ckpt" / "state" / "**" / "*"), recursive=True)
-        assert any(f.endswith(".zip") for f in state_files), "dedup state not under RocksDB"
+        assert any(f.endswith(_ROCKSDB_FILES) for f in state_files), "dedup state not under RocksDB"
+        assert not any(f.endswith(".delta") for f in state_files), "HDFS provider artifacts present"
+        assert any(f.endswith(".changelog") for f in state_files), "commits not changelog-checkpointed"
     finally:
-        if prior is not None:
-            spark.conf.set(key, prior)
+        for k, v in prior.items():
+            if v is not None:
+                spark.conf.set(k, v)
+
+
+def test_stream_restarts_from_changelog_only_checkpoint(spark, tmp_path):
+    """Recovery from a changelog-checkpointed dedup state: after one
+    micro-batch the checkpoint holds `N.changelog` commits and no
+    snapshot. A restart on it with a redelivered file plus one new file
+    must rebuild the dedup state from the changelogs alone — the
+    redelivered rows are dropped before the sink (their archived
+    ingest_ts does not move) — and the archive must equal the batch
+    twin, latest row per key, with no key duplicated."""
+    import glob
+
+    from pyspark.sql import Window
+
+    from mysense_spark.streaming.pipeline import run_file_batch, run_file_stream
+
+    keys = ["kit_id", "ts", "field"]
+    in_dir, ckpt, out_dir = tmp_path / "in", str(tmp_path / "ckpt"), str(tmp_path / "arch")
+    in_dir.mkdir()
+    _write_dump(in_dir, "a.mqtt", [V2_PORT2, V2_PORT4])
+    q = run_file_stream(spark, str(in_dir), ckpt, out_dir)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    state_files = glob.glob(f"{ckpt}/state/**/*", recursive=True)
+    assert any(f.endswith(".changelog") for f in state_files)
+    assert not any(f.endswith(".zip") for f in state_files), "snapshot before restart"
+    first = {
+        (r["kit_id"], r["ts"], r["field"]): r["ingest_ts"]
+        for r in spark.read.parquet(out_dir).collect()
+    }
+
+    # same event times, so the redelivered rows sit above the watermark
+    # and only the restored dedup state can drop them
+    _write_dump(in_dir, "a-redelivered.mqtt", [V2_PORT2])
+    _write_dump(in_dir, "b.mqtt", [V2_PORT2.replace("lopyprototype20180404", "lopy-new")])
+    q2 = run_file_stream(spark, str(in_dir), ckpt, out_dir)
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+
+    arc = spark.read.parquet(out_dir)
+    assert arc.groupBy(*keys).count().where("count > 1").count() == 0, "duplicated keys"
+    after = {(r["kit_id"], r["ts"], r["field"]): r["ingest_ts"] for r in arc.collect()}
+    assert {k: after[k] for k in first} == first, "redelivered rows reached the sink"
+    cols = ["kit_id", "ts", "field", "value", "unit", "valid"]
+    twin = (
+        run_file_batch(spark, str(in_dir))
+        .withColumn("_rn", F.row_number().over(Window.partitionBy(*keys).orderBy(F.desc("ingest_ts"))))
+        .where("_rn = 1")
+        .select(*cols)
+    )
+    assert any(k[0].endswith("lopy-new") for k in after), "new file not archived"
+    assert sorted(arc.select(*cols).collect()) == sorted(twin.collect())
 
 
 def test_stream_append_mode_auto_compacts_closed_days(spark, tmp_path):

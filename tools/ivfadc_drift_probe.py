@@ -91,7 +91,7 @@ def main() -> None:
     )
 
     idx_appended = f"{WORK}/idx_appended"
-    begin_query("drift-base-build")  # release prior phase's tracked persists
+    begin_query()  # release prior phase's tracked persists
     t0 = time.monotonic()
     S.build_ivfadc_index(spark, d_base, idx_appended)
     base_build_sec = time.monotonic() - t0
@@ -125,7 +125,7 @@ def main() -> None:
         ).coalesce(4).write.parquet(f"{d_f}/embeddings.parquet")
         vecs_f = S._vectors(spark, d_f)
 
-        begin_query(f"drift-append-{frac}")
+        begin_query()
         t0 = time.monotonic()
         S.ivfadc_index_append(
             spark, vecs_f.where(F.col("vec_id") >= n + n_q + lo), idx_appended
@@ -133,12 +133,12 @@ def main() -> None:
         append_sec = time.monotonic() - t0
 
         idx_rebuilt = f"{WORK}/idx_f{int(frac * 100)}"
-        begin_query(f"drift-rebuild-{frac}")
+        begin_query()
         t0 = time.monotonic()
         S.build_ivfadc_index(spark, d_f, idx_rebuilt)
         rebuild_sec = time.monotonic() - t0
 
-        begin_query(f"drift-score-{frac}")
+        begin_query()
         truth = exact_top(vecs_f)
         appended = S.ann_ivfadc_search_indexed(spark, vecs_f, idx_appended).collect()
         rebuilt = S.ann_ivfadc_search_indexed(spark, vecs_f, idx_rebuilt).collect()

@@ -50,18 +50,18 @@ def main() -> None:
 
     # --- IVFADC lifecycle ---------------------------------------------------
     shutil.rmtree(S.ivfadc_index_path(sf_dir), ignore_errors=True)
-    begin_query("probe-ivfadc-build")
+    begin_query()
     t0 = time.monotonic()
     idx = S.ensure_ivfadc_index(spark, sf_dir)
     build = round(time.monotonic() - t0, 2)
     warm, inline = [], []
     for _ in range(reps):
-        begin_query("probe-ivfadc-indexed")  # release caches: each rep cold-cache
+        begin_query()  # release caches: each rep cold-cache
         vecs = S._vectors(spark, sf_dir)
         w, n1 = timed(lambda: S.ann_ivfadc_search_indexed(spark, vecs, idx))
         warm.append(w)
     for _ in range(reps):
-        begin_query("probe-ivfadc-inline")
+        begin_query()
         vecs = S._vectors(spark, sf_dir)
         w, n2 = timed(
             lambda: S.ann_ivfadc_search(vecs, centroids=S.kmeans_centroids(spark, sf_dir))
@@ -80,18 +80,18 @@ def main() -> None:
 
     # --- SRP lifecycle --------------------------------------------------------
     shutil.rmtree(S.srp_index_path(sf_dir), ignore_errors=True)
-    begin_query("probe-srp-build")
+    begin_query()
     t0 = time.monotonic()
     sidx = S.ensure_srp_index(spark, sf_dir)
     sbuild = round(time.monotonic() - t0, 2)
     swarm, sinline = [], []
     for _ in range(reps):
-        begin_query("probe-srp-indexed")
+        begin_query()
         vecs = S._vectors(spark, sf_dir)
         w, n1 = timed(lambda: S.ann_srp_search_indexed(spark, vecs, sidx))
         swarm.append(w)
     for _ in range(reps):
-        begin_query("probe-srp-inline")
+        begin_query()
         vecs = S._vectors(spark, sf_dir)
         w, n2 = timed(
             lambda: S.ann_srp_search(vecs, n_bits=S._SRP_BITS, n_probes=S._SRP_PROBES)
@@ -118,13 +118,13 @@ def main() -> None:
     cidx = f"{sidx}.probe_compacted"
     shutil.rmtree(cidx, ignore_errors=True)
     shutil.copytree(sidx, cidx)
-    begin_query("probe-srp-compact")
+    begin_query()
     t0 = time.monotonic()
     S.compact_srp_index(spark, cidx)
     compact_sec = round(time.monotonic() - t0, 2)
     cwarm = []
     for _ in range(reps):
-        begin_query("probe-srp-compacted")
+        begin_query()
         vecs = S._vectors(spark, sf_dir)
         w, n3 = timed(lambda: S.ann_srp_search_indexed(spark, vecs, cidx))
         cwarm.append(w)
